@@ -1,0 +1,3 @@
+#!/bin/sh
+# Logging copy of run_cranker_read.sh for the traced run (see _logged.sh).
+exec "$(dirname "$0")/_logged.sh" read "$@"
