@@ -1,18 +1,37 @@
-"""Checkpoint durability policy — pricing the localCheckpoint fault
-envelope (r19, VERDICT r18 "What's wrong").
+"""Checkpoint durability policy — the ONE materialization entry point.
 
-The engine truncates lineage at ~30 sites (iterative loops, multi-
-consumer fan-outs, pandas-UDF single-execution pins). Every one of
-them used ``localCheckpoint`` unconditionally, which is the FASTEST
-materialization but also the least durable: blocks live ONLY in the
-executors' caching subsystem with NO lineage left to recompute them,
-so on a real cluster **losing one executor after the checkpoint makes
-those partitions unrecoverable and fails the job**. Invisible on
-local[32]; near-certain over an hours-long 100 TB corpus build across
-thousands of executors. This module is the ONE place that trade is
-priced, and :func:`materialize` is the knob the corpus-sized sites
-thread through (dedup_mix_pack, the PageRank/CC iteration loops; see
-SCALE.md "Checkpoint durability" for the full regime table).
+The engine truncates lineage at ~60 sites (iterative loops, multi-
+consumer fan-outs such as the build-once/probe-many posting indexes,
+pandas-UDF single-execution pins, the final-sort guard on query
+tails, per-micro-batch pins in the streaming sinks). Every one of
+them calls :func:`materialize` — no other module in the package calls
+``localCheckpoint`` / ``checkpoint`` / ``persist``, save the one
+documented exemption in graph.pagerank_int (pinned by
+tests/test_single_materialization.py) — so the durability of the
+materialized blocks, which IS the job's fault tolerance at those
+points, is chosen once per job instead of per operator.
+
+The regime is the session runtime conf ``spark.graft.materialize``
+(:data:`CONF`), read at each call (a conf read is a driver-local
+lookup — ~0.24 ms, no Spark job — so it is not cached, and a job may
+set it at any point before building its frames)::
+
+    spark.conf.set("spark.graft.materialize", "reliable")
+    spark.sparkContext.setCheckpointDir("hdfs:///tmp/ckpt")
+
+Unset means ``"local"``: a plain session that never sets it (an
+externally built one included) runs exactly the pre-conf plans. An
+unknown value raises at the first materialization. Streaming sinks
+read the conf through the query's cloned session, so set it before
+``start()``.
+
+The trade ``"local"`` makes: blocks live ONLY in the executors'
+caching subsystem with NO lineage left to recompute them, so on a real
+cluster **losing one executor after the checkpoint makes those
+partitions unrecoverable and fails the job**. Invisible on local[32];
+near-certain over an hours-long 100 TB corpus build across thousands
+of executors (see SCALE.md "Checkpoint durability" for the full regime
+table).
 
 Three regimes, cost vs. what survives:
 
@@ -41,9 +60,9 @@ Three regimes, cost vs. what survives:
   truncation point.
 
 Parity contract: the regimes change WHERE blocks live, never what any
-query returns — pinned by tests/test_reliability.py running
-dedup_mix_pack and pagerank_int under all three regimes against the
-default-mode output. The envelope itself is fault-injection-tested
+query returns — pinned by tests/test_reliability.py sweeping the conf
+over :data:`MODES` for every class of materialization site against
+the default-mode output. The envelope itself is fault-injection-tested
 there too (purge the materialized blocks: local dies with Spark's
 checkpoint-block-not-found, reliable re-reads from the DFS), and the
 wall-clock tax is measured in BASELINE.md (`make checkpoint-tax`,
@@ -77,9 +96,12 @@ from pyspark.sql import DataFrame
 #: parity-tested and priced.
 MODES = ("local", "replicated", "reliable")
 
+#: Session runtime conf naming the regime (one of MODES; unset = "local").
+CONF = "spark.graft.materialize"
 
-def materialize(df: DataFrame, mode: str = "local", eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage under the chosen
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage under the session's
     durability regime (module doc). ``"reliable"`` requires a
     checkpoint directory; failing loudly here beats Spark's late
     executor-side error after the upstream work already ran.
@@ -111,6 +133,7 @@ def materialize(df: DataFrame, mode: str = "local", eager: bool = True) -> DataF
     durability should ``.persist()`` the RETURNED frame and
     ``.unpersist()`` it when done — caller-owned lifecycle, so
     nothing leaks."""
+    mode = df.sparkSession.conf.get(CONF, "local")
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if mode == "replicated":
@@ -121,12 +144,10 @@ def materialize(df: DataFrame, mode: str = "local", eager: bool = True) -> DataF
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             raise ValueError(
-                "checkpoint_mode='reliable' needs a reliable checkpoint "
-                "directory: call spark.sparkContext.setCheckpointDir(<DFS "
-                "path>) first (an executor-local path silently gives NO "
-                "durability on a real cluster — use HDFS/S3/shared storage)"
+                f"{CONF}=reliable needs a reliable checkpoint directory: "
+                "call spark.sparkContext.setCheckpointDir(<DFS path>) first "
+                "(an executor-local path silently gives NO durability on a "
+                "real cluster — use HDFS/S3/shared storage)"
             )
         return df.checkpoint(eager=True)  # docstring: why never lazy
-    raise ValueError(
-        f"checkpoint_mode must be one of {MODES}; got {mode!r}"
-    )
+    raise ValueError(f"{CONF} must be one of {MODES}; got {mode!r}")

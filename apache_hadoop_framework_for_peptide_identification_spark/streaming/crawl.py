@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..operators import html as H
 from ..operators import urls as U
 from ..operators import warc as W
+from ..operators.reliability import materialize
 from .windows import _guard_fresh_checkpoint
 
 _KEEPER_SUB = "url_keepers"
@@ -235,9 +236,9 @@ def _crawl_ingest_batch(
     )
     cols = ["canon_url", "rec_id", "qual", *extra_cols, "clean_text"]
     # The batch frame is consumed twice (slim compare + payload fetch);
-    # localCheckpoint pins the parse/extract projections to one
+    # materializing pins the parse/extract projections to one
     # execution per batch (the stream_dedup_ladder rule).
-    arriving = gated.select(*cols).localCheckpoint()
+    arriving = materialize(gated.select(*cols))
     slim_arr = arriving.select("canon_url", "rec_id", "qual")
     # Existence probe must see the batch_id=-1 SEED partition too —
     # _max_batch_id(...) >= 0 here ignored a seed-only store, so the

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import normalize_events_ts
+from ..operators.reliability import materialize
 from ..session import configure
 
 
@@ -760,7 +761,7 @@ def stream_dedup_ladder(
     arrival-consistent reading, pinned by pytest.
 
     Per-batch cost: one Arrow-batched NFC pass over the batch (the
-    normalized frame localCheckpoints ONCE — the q195/q193
+    normalized frame materializes ONCE — the q195/q193
     single-execution rule), one hash equi-join against the keeper
     store (k_n is a 32-hex key; at 100 TB bucket the keeper store by
     k_n so this join co-locates), one keeper window over batch
@@ -791,7 +792,7 @@ def stream_dedup_ladder(
             )
         )
         # one pandas-UDF execution per batch, whatever the fan-out below
-        keyed = (
+        keyed = materialize(
             bdf.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("raw"))
             .withColumn("__nfc", unicode_normalize(F.col("raw")))
             .select(
@@ -801,7 +802,6 @@ def stream_dedup_ladder(
                 norm.alias("norm"),
                 F.md5(norm).alias("k_n"),
             )
-            .localCheckpoint()
         )
         if _max_batch_id(spark, f"{store_dir}/keepers") >= 0:
             kst = (
@@ -815,7 +815,7 @@ def stream_dedup_ladder(
             )
         else:
             kst = spark.createDataFrame([], keeper_schema)
-        j = keyed.join(kst, "k_n", "left").localCheckpoint()
+        j = materialize(keyed.join(kst, "k_n", "left"))
         hits = j.filter(F.col("keeper_id").isNotNull())
         miss = j.filter(F.col("keeper_id").isNull()).select(
             "doc_id", "k_r", "k_u", "k_n", "norm"
@@ -825,16 +825,18 @@ def stream_dedup_ladder(
             .orderBy("doc_id")
             .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
         )
-        ann = miss.select(
-            "doc_id",
-            "k_r",
-            "k_u",
-            "k_n",
-            "norm",
-            F.first("doc_id").over(wfull).alias("keeper_id"),
-            F.first("k_r").over(wfull).alias("keeper_kr"),
-            F.first("k_u").over(wfull).alias("keeper_ku"),
-        ).localCheckpoint()
+        ann = materialize(
+            miss.select(
+                "doc_id",
+                "k_r",
+                "k_u",
+                "k_n",
+                "norm",
+                F.first("doc_id").over(wfull).alias("keeper_id"),
+                F.first("k_r").over(wfull).alias("keeper_kr"),
+                F.first("k_u").over(wfull).alias("keeper_ku"),
+            )
+        )
         newk = ann.filter(F.col("doc_id") == F.col("keeper_id"))
         newk.select("k_n", "keeper_id", "keeper_kr", "keeper_ku").write.mode(
             "overwrite"

@@ -8,8 +8,10 @@ Writes <outdir>/<query>_<suffix>.txt (suffix defaults to "before").
 The optimization judge reads these files instead of running Spark, so
 they are committed verbatim (plans/r19/).
 
-Since r19 the engine materializes multi-consumer frames with (mostly
-lazy) ``localCheckpoint``, which replaces the logical plan with a
+Since r19 the engine materializes multi-consumer frames through
+``operators/reliability.materialize`` — (mostly lazy)
+``localCheckpoint`` under the default ``spark.graft.materialize``
+regime — which replaces the logical plan with a
 LogicalRDD at BUILD time — a plain explain of the query tail would
 show only `Scan ExistingRDD` above each truncation point. To keep the
 committed evidence honest, this script intercepts every

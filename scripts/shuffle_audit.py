@@ -16,9 +16,9 @@ Reading the input column: Spark's task inputMetrics count BOTH file
 scans and cached/localCheckpointed BLOCK reads — a query that buys a
 posting index once and reads it from executor memory four times
 reports ~4× the index size as "input" while touching the source
-parquet once (verified: q121's operator at sf0.01 reads 20.1 MB of
-input with materialize='local_checkpoint' and 34 KB — pure file scans
-— with materialize='none'). The column is therefore labeled "input
+parquet once (verified: q121's operator at sf0.01 read 20.1 MB of
+input with its posting index materialized and 34 KB — pure file scans
+— without it). The column is therefore labeled "input
 (file+cache)"; per-file source bytes at sf0.1 are sub-MiB for every
 table involved.
 

@@ -5,11 +5,35 @@ cartesian product fails here before it ever reaches a cluster."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from apache_hadoop_framework_for_peptide_identification_spark.queries import BENCH_REGISTRY, REGISTRY
 
 SF = "/root/testdata/sf0.001"
+
+
+@contextlib.contextmanager
+def _on_materialize(record):
+    """Call ``record(frame)`` with the input frame of every
+    ``localCheckpoint`` made inside the block — what
+    ``reliability.materialize`` issues under the default regime."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    orig = _CDF.localCheckpoint
+
+    def recording(self, eager=True, storageLevel=None):
+        record(self)
+        if storageLevel is None:
+            return orig(self, eager=eager)
+        return orig(self, eager=eager, storageLevel=storageLevel)
+
+    _CDF.localCheckpoint = recording
+    try:
+        yield
+    finally:
+        _CDF.localCheckpoint = orig
 
 
 def _plan(spark, name: str) -> str:
@@ -24,22 +48,11 @@ def _plan(spark, name: str) -> str:
     checkpoint calls recovers each stage's real plan (each stage
     executes exactly once), so the assertions keep covering the whole
     computation."""
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
     stages: list[str] = []
-    orig = _CDF.localCheckpoint
-
-    def recording(self, eager=True, storageLevel=None):
-        stages.append(self._jdf.queryExecution().executedPlan().toString())
-        if storageLevel is None:
-            return orig(self, eager=eager)
-        return orig(self, eager=eager, storageLevel=storageLevel)
-
-    _CDF.localCheckpoint = recording
-    try:
+    with _on_materialize(
+        lambda f: stages.append(f._jdf.queryExecution().executedPlan().toString())
+    ):
         df = (REGISTRY.get(name) or BENCH_REGISTRY[name]).fn(spark, SF)
-    finally:
-        _CDF.localCheckpoint = orig
     stages.append(df._jdf.queryExecution().executedPlan().toString())
     return "\n".join(stages)
 
@@ -186,16 +199,18 @@ def test_no_cartesian_products_anywhere(spark):
     SMALL side via BroadcastNestedLoopJoin; a CartesianProduct of two
     big sides is always a bug)."""
     skip_prefixes = ("q5", "q6")  # streaming / UDF / source queries: slow or stateful
-    offenders = []
+    offenders, unbuildable = [], []
     for name in REGISTRY:
         if name.startswith(skip_prefixes):
             continue
         try:
             plan = _plan(spark, name)
-        except Exception:
+        except Exception as e:  # a plan that cannot build is a failure too
+            unbuildable.append(f"{name}: {type(e).__name__}: {str(e)[:200]}")
             continue
         if "CartesianProduct" in plan:
             offenders.append(name)
+    assert not unbuildable, unbuildable
     # q12 theta pairs and q66 exact near-dup are DOCUMENTED quadratic
     # validation baselines (small inputs by contract).
     allowed = {"q12_join_theta_pairs", "q66_embedding_neardup"}
@@ -453,8 +468,16 @@ def test_prefix_filter_exchanges_carry_hashed_shingles_only(spark):
         from tests.planwalk import exchanges as walk_exchanges
 
         for fn in (dedup.prefix_jaccard_pairs, dedup.containment_prefix_pairs):
-            df = fn(d, "doc_id", "text", n=3, materialize="none")
-            exchanges = walk_exchanges(df)  # AQE-proof shared walker (r18)
+            # The posting index materializes mid-operator, which replaces
+            # its plan with a LogicalRDD leaf at build time: record each
+            # materialization stage's input frame so the walk covers the
+            # exchanges below it too.
+            stages = []
+            with _on_materialize(stages.append):
+                df = fn(d, "doc_id", "text", n=3)
+            assert stages, f"{fn.__name__}: no materialization stage recorded"
+            # AQE-proof shared walker (r18), over every stage + the final plan
+            exchanges = [x for f in (*stages, df) for x in walk_exchanges(f)]
             assert exchanges, "no exchanges found — the walker went blind"
             bad, binary_sh = [], 0
             for node in exchanges:

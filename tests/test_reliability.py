@@ -1,40 +1,59 @@
 """Checkpoint-durability parity (r19 — VERDICT r18 "What's wrong").
 
-The `checkpoint_mode` knob (operators/reliability.py) prices the
-localCheckpoint fault envelope: "local" (executor-cache blocks,
-job-fatal on executor loss), "replicated" (2× replicas, survives
-single loss), "reliable" (DFS checkpoint, survives any loss). The
-contract these tests pin: the regimes change WHERE blocks live and
-what survives executor loss — never what any operator returns. Each
-knob-carrying operator runs under all three regimes and must produce
-IDENTICAL rows; the reliable mode's loud no-checkpoint-dir guard is
-pinned too (failing at the call site beats Spark's late executor-side
-error after the upstream work already ran).
+Every lineage truncation in the package goes through
+``operators/reliability.materialize``, whose regime is the session
+runtime conf ``spark.graft.materialize``: "local" (executor-cache
+blocks, job-fatal on executor loss), "replicated" (2× replicas,
+survives single loss), "reliable" (DFS checkpoint, survives any
+loss). The contract these tests pin: the regimes change WHERE blocks
+live and what survives executor loss — never what any operator
+returns. One sweep runs every class of materialization site under
+every regime and requires rows IDENTICAL to "local"; the reliable
+mode's loud no-checkpoint-dir guard is pinned too (failing at the
+call site beats Spark's late executor-side error after the upstream
+work already ran).
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
+import os
+import random
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from apache_hadoop_framework_for_peptide_identification_spark.operators.graph import (
-    pagerank_int,
-)
-from apache_hadoop_framework_for_peptide_identification_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
-from apache_hadoop_framework_for_peptide_identification_spark.operators.pipeline import (
-    dedup_mix_pack,
+from apache_hadoop_framework_for_peptide_identification_spark.operators import (
+    corpus as C,
+    dedup as D,
+    graph as G,
+    pipeline as P,
+    similarity as S,
+    urls as U,
 )
 from apache_hadoop_framework_for_peptide_identification_spark.operators.reliability import (
+    CONF,
     MODES,
     materialize,
 )
+from apache_hadoop_framework_for_peptide_identification_spark.queries import (
+    materialized_sort,
+)
+
+
+@contextlib.contextmanager
+def regime(spark, mode):
+    """Run the body under durability regime ``mode``; always restores
+    the unset default so no other test inherits it (the session is
+    shared module-to-module)."""
+    spark.conf.set(CONF, mode)
+    try:
+        yield
+    finally:
+        spark.conf.unset(CONF)
 
 
 @pytest.fixture(scope="module")
@@ -55,19 +74,47 @@ def test_reliable_mode_requires_checkpoint_dir_guard(spark):
     at the call site, not a late executor-side Spark error."""
     if spark.sparkContext.getCheckpointDir() is not None:
         pytest.skip("a checkpoint dir is already set in this session")
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        materialize(df, "reliable")
+    with regime(spark, "reliable"), pytest.raises(ValueError, match="setCheckpointDir"):
+        materialize(spark.range(3))
 
 
 def test_unknown_mode_rejected(spark):
-    with pytest.raises(ValueError, match="checkpoint_mode"):
-        materialize(spark.range(1), "durable")
+    """An unknown conf value refuses at the first materialization —
+    both on the entry point itself and through an operator that
+    materializes at build time."""
+    for bogus in ("durable", "disk"):
+        with regime(spark, bogus), pytest.raises(ValueError, match=CONF):
+            materialize(spark.range(1))
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    with regime(spark, "persist"), pytest.raises(ValueError, match=CONF):
+        D.prefix_jaccard_pairs(docs, "doc_id", "text")
 
 
-def _fixture_docs(spark):
-    """Tiny corpus with exact dups (1≡2), a near-dup pair (3~4), and
-    distinct rows across two topics — exercises every ladder tier."""
+# ------------------------------------------------------------ the sweep
+#
+# One builder per site class: ``site(spark) -> {label: DataFrame}``.
+# Each builder is called INSIDE the regime (materialize reads the conf
+# at build time), and every returned frame must collect to the same
+# rows under every mode.
+
+_WORDS = [f"w{i}" for i in range(40)]
+
+
+def _near_dup_docs(spark):
+    """20 random docs + 5 lightly-edited twins (ids 1000+i of doc i)."""
+    rng = random.Random(79)
+    docs = [" ".join(rng.choice(_WORDS) for _ in range(15)) for _ in range(20)]
+    rows = [(i, t) for i, t in enumerate(docs)]
+    for i in range(5):
+        toks = docs[i].split()
+        toks[rng.randrange(len(toks))] = rng.choice(_WORDS)
+        rows.append((1000 + i, " ".join(toks)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _ladder_docs(spark):
+    """Exact dups (1≡2), a near-dup pair (3~4), and distinct rows
+    across two topics — exercises every dedup_mix_pack tier."""
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
         (1, "news", base),
@@ -80,61 +127,40 @@ def _fixture_docs(spark):
     return spark.createDataFrame(rows, "rec_id long, topic string, clean_text string")
 
 
-def _collect_sorted(df):
-    return [tuple(r) for r in df.orderBy(*df.columns).collect()]
+def _site_dedup_mix_pack(spark):
+    return {"mix_pack": P.dedup_mix_pack(_ladder_docs(spark), target_total=4, budget=32)}
 
 
-def test_dedup_mix_pack_parity_across_modes(spark, ckpt_dir):
-    docs = _fixture_docs(spark)
-    out = {
-        m: _collect_sorted(
-            dedup_mix_pack(docs, target_total=4, budget=32, checkpoint_mode=m)
-        )
-        for m in MODES
-    }
-    assert out["replicated"] == out["local"]
-    assert out["reliable"] == out["local"]
-    assert len(out["local"]) > 0
-
-
-def test_pagerank_parity_across_modes(spark, ckpt_dir):
-    edges = spark.createDataFrame(
+def _pagerank_edges(spark):
+    return spark.createDataFrame(
         [(1, 2, 1), (2, 3, 2), (3, 1, 1), (1, 3, 3), (4, 1, 1)],
         "src long, dst long, w long",
     )
-    out = {
-        m: _collect_sorted(
-            pagerank_int(edges, "src", "dst", "w", iters=7, checkpoint_every=2,
-                         checkpoint_mode=m).select("node", "rank_int")
-        )
-        for m in MODES
+
+
+def _site_pagerank_int(spark):
+    e = _pagerank_edges(spark)
+    return {
+        f"broadcast={b}": G.pagerank_int(
+            e, "src", "dst", "w", iters=7, checkpoint_every=2, broadcast_ranks=b
+        ).select("node", "rank_int")
+        for b in (False, True)
     }
-    assert out["replicated"] == out["local"]
-    assert out["reliable"] == out["local"]
 
 
-def test_connected_components_parity_across_modes(spark, ckpt_dir):
+def _site_connected_components(spark):
     # two components + a self-loop singleton; chain long enough to
     # force several propagation rounds
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)],
-        "id_a long, id_b long",
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)], "id_a long, id_b long"
     )
-    for fn in (connected_components, connected_components_star):
-        out = {
-            m: _collect_sorted(fn(edges, checkpoint_mode=m)) for m in MODES
-        }
-        assert out["replicated"] == out["local"], fn.__name__
-        assert out["reliable"] == out["local"], fn.__name__
-        labels = dict(out["local"])
-        assert labels[4] == 1 and labels[11] == 10 and labels[20] == 20, fn.__name__
+    return {
+        "hash_min": D.connected_components(edges),
+        "star": D.connected_components_star(edges),
+    }
 
 
-def test_sitemap_frontier_parity_across_modes(spark, ckpt_dir):
-    from apache_hadoop_framework_for_peptide_identification_spark.operators import (
-        urls as U,
-    )
-
+def _site_sitemap_frontier(spark):
     fetched = spark.createDataFrame(
         [
             ("https://a.com/index.xml",
@@ -157,64 +183,176 @@ def test_sitemap_frontier_parity_across_modes(spark, ckpt_dir):
     seeds = spark.createDataFrame(
         [("a.com", "https://a.com/index.xml")], "host string, sitemap_url string"
     )
-    out = {
-        m: _collect_sorted(
-            U.sitemap_frontier(fetched, seeds, checkpoint_mode=m).select(
-                "loc", "depth", "source_sitemap"
-            )
+    return {
+        "frontier": U.sitemap_frontier(fetched, seeds).select(
+            "loc", "depth", "source_sitemap"
         )
-        for m in MODES
     }
-    assert out["replicated"] == out["local"]
-    assert out["reliable"] == out["local"]
-    # pages surface at BOTH depths (1 via c1, 2 via the nested c2→c3
-    # index), so every per-level _mat truncation actually executed
-    assert sorted(d for _, d, _ in out["local"]) == [1, 2, 2]
 
 
-def test_global_sort_rank_parity_across_modes(spark, ckpt_dir):
+def _site_global_sort_rank(spark):
     """The one CORPUS-sized checkpoint site: the range-partitioned
     frame. Keys deliberately arrive unsorted and skewed across input
     partitions so the range exchange + prefix-offset join do real
     work under every regime."""
-    from apache_hadoop_framework_for_peptide_identification_spark.operators.pipeline import (
-        epoch_shuffle,
-        global_sort_rank,
-    )
-
-    df = spark.range(0, 97, 1, 5).withColumn(
-        "key", F.md5(F.col("id").cast("string"))
-    )
-    out = {
-        m: _collect_sorted(
-            global_sort_rank(df, "key", n_partitions=4, checkpoint_mode=m)
-        )
-        for m in MODES
+    df = spark.range(0, 97, 1, 5).withColumn("key", F.md5(F.col("id").cast("string")))
+    return {
+        "rank": P.global_sort_rank(df, "key", n_partitions=4),
+        "epoch": P.epoch_shuffle(spark.range(20), "id", epoch=3),
     }
-    assert out["replicated"] == out["local"]
-    assert out["reliable"] == out["local"]
-    ranked = sorted((r[1], r[2]) for r in out["local"])  # (key, pos)
+
+
+def _site_materialized_sort(spark):
+    df = spark.range(0, 50, 1, 4).withColumn("k", F.col("id") % 7)
+    return {"sorted": materialized_sort(df, F.col("k").desc(), "id")}
+
+
+def _site_triangle_count(spark):
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    noise = [(2, 1), (5, 5), (4, 5), (6, 7), (7, 8), (8, 6)]
+    return {"tri": G.triangle_count(spark.createDataFrame(k4 + noise, "src long, dst long"))}
+
+
+def _site_bm25_topk(spark):
+    docs = _near_dup_docs(spark)
+    return {"bm25": C.bm25_topk(docs, "doc_id", "text", ("w1", "w7", "w30"), k=5)}
+
+
+def _site_minhash(spark):
+    docs = _near_dup_docs(spark)
+    return {
+        "candidates": D.minhash_lsh_candidates(docs, "doc_id", "text", num_hashes=32, bands=16),
+        "pairs": D.minhash_jaccard_pairs(
+            docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
+        ),
+    }
+
+
+def _site_embedding_neardup_lsh(spark):
+    rng = random.Random(5)
+    vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(30)]
+    rows = [(i, v) for i, v in enumerate(vecs)]
+    rows += [(100 + i, [x + rng.gauss(0, 0.01) for x in vecs[i]]) for i in range(5)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return {"lsh": S.embedding_neardup_lsh(emb, threshold=0.95, bits=16, bands=8, dim=8)}
+
+
+def _site_prefix_filters(spark):
+    docs = _near_dup_docs(spark)
+    return {
+        "jaccard": D.prefix_jaccard_pairs(docs, "doc_id", "text", threshold=0.6),
+        "containment": D.containment_prefix_pairs(docs, "doc_id", "text", threshold=0.6),
+    }
+
+
+def _site_substring_dedup(spark):
+    passage = " ".join(f"p{i}" for i in range(16))
+    docs = spark.createDataFrame(
+        [
+            (1, passage + " tail one here"),
+            (2, "head words two " + passage),
+            (3, " ".join(f"u{i}" for i in range(20))),
+        ],
+        "doc_id long, text string",
+    )
+    return {
+        "aligned": D.exact_substring_dedup(docs, "doc_id", "text", chunk_tokens=4),
+        "sliding": D.sliding_substring_dedup(docs, "doc_id", "text", window_tokens=4),
+    }
+
+
+SITES = {
+    "dedup_mix_pack": _site_dedup_mix_pack,
+    "pagerank_int": _site_pagerank_int,
+    "connected_components": _site_connected_components,
+    "sitemap_frontier": _site_sitemap_frontier,
+    "global_sort_rank": _site_global_sort_rank,
+    "materialized_sort": _site_materialized_sort,
+    "triangle_count": _site_triangle_count,
+    "bm25_topk": _site_bm25_topk,
+    "minhash": _site_minhash,
+    "embedding_neardup_lsh": _site_embedding_neardup_lsh,
+    "prefix_filters": _site_prefix_filters,
+    "substring_dedup": _site_substring_dedup,
+}
+
+
+def _check_connected_components(out):
+    for labels in (dict(rows) for rows in out.values()):
+        assert labels[4] == 1 and labels[11] == 10 and labels[20] == 20
+
+
+def _check_sitemap_frontier(out):
+    # pages surface at BOTH depths (1 via c1, 2 via the nested c2→c3
+    # index), so every per-level truncation actually executed
+    assert sorted(d for _, d, _ in out["frontier"]) == [1, 2, 2]
+
+
+def _check_global_sort_rank(out):
+    ranked = sorted((r[1], r[2]) for r in out["rank"])  # (key, pos)
     assert [p for _, p in ranked] == list(range(1, 98))  # dense, key-ordered
 
-    ep = {
-        m: _collect_sorted(
-            epoch_shuffle(spark.range(20), "id", epoch=3, checkpoint_mode=m)
-        )
-        for m in MODES
-    }
-    assert ep["replicated"] == ep["local"] and ep["reliable"] == ep["local"]
+
+def _check_materialized_sort(out):
+    assert out["sorted"] == sorted(out["sorted"], key=lambda r: (-r[1], r[0]))
+
+
+def _check_triangle_count(out):
+    assert out["tri"] == [(8, 10, 5)]  # K4's 4 + the 6-7-8 cycle
+
+
+def _check_prefix_filters(out):
+    assert len(out["jaccard"]) >= 5  # the planted twins
+
+
+CHECKS = {
+    "connected_components": _check_connected_components,
+    "sitemap_frontier": _check_sitemap_frontier,
+    "global_sort_rank": _check_global_sort_rank,
+    "materialized_sort": _check_materialized_sort,
+    "triangle_count": _check_triangle_count,
+    "prefix_filters": _check_prefix_filters,
+}
+
+
+def _rows(df, ordered=False):
+    rows = [tuple(r) for r in df.collect()]
+    return rows if ordered else sorted(rows, key=repr)
+
+
+def _n_files(d):
+    return sum(len(fs) for _, _, fs in os.walk(d))
+
+
+@pytest.mark.parametrize("site", list(SITES))
+def test_parity_across_modes(spark, ckpt_dir, site):
+    out = {}
+    for mode in MODES:
+        before = _n_files(ckpt_dir)
+        with regime(spark, mode):
+            frames = SITES[site](spark)
+            out[mode] = {
+                label: _rows(df, ordered=site == "materialized_sort")
+                for label, df in frames.items()
+            }
+        # the site really read the conf: reliable wrote DFS files
+        assert (_n_files(ckpt_dir) > before) == (mode == "reliable"), (site, mode)
+    for mode in MODES:
+        assert out[mode] == out["local"], f"{site}: {mode} differs from local"
+    assert any(out["local"].values()), f"{site}: every output is empty"
+    CHECKS.get(site, lambda _: None)(out["local"])
+    spark.catalog.clearCache()  # pagerank's session-lifetime fe cache
 
 
 def test_reliable_mode_actually_writes_to_checkpoint_dir(spark, ckpt_dir):
     """The reliable regime must be a REAL DFS checkpoint (files under
     the checkpoint dir), not a silent localCheckpoint fallback — the
     durability claim rests on the blocks living off-executor."""
-    import os
-
-    before = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
-    df = materialize(spark.range(100).withColumn("x", F.col("id") * 2), "reliable")
+    before = _n_files(ckpt_dir)
+    with regime(spark, "reliable"):
+        df = materialize(spark.range(100).withColumn("x", F.col("id") * 2))
     assert df.count() == 100
-    after = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
+    after = _n_files(ckpt_dir)
     assert after > before, "reliable mode wrote nothing under the checkpoint dir"
     # and those writes are lz4'd: the engine session sets the core
     # conf (0.52x bytes A/B, BASELINE.md r19) — pin it so a builder
@@ -249,11 +387,10 @@ def test_materialize_once_across_modes_and_eagerness(spark, ckpt_dir):
                 _acc.add(1)
                 return x
 
-            df = materialize(
-                spark.range(0, 200, 1, 4).select(tick("id").alias("v")),
-                mode,
-                eager=eager,
-            )
+            with regime(spark, mode):
+                df = materialize(
+                    spark.range(0, 200, 1, 4).select(tick("id").alias("v")), eager=eager
+                )
             df.count()
             df.agg(F.sum("v")).collect()  # second consumer
             assert acc.value == 200, (
@@ -294,9 +431,8 @@ def test_executor_block_loss_is_fatal_local_but_survivable_reliable(spark, ckpt_
     from py4j.protocol import Py4JJavaError
 
     def build(mode):
-        return materialize(
-            spark.range(0, 500, 1, 4).withColumn("x", F.col("id") * 7), mode
-        )
+        with regime(spark, mode):
+            return materialize(spark.range(0, 500, 1, 4).withColumn("x", F.col("id") * 7))
 
     lost, new_local = _purge_new_rdd_blocks(spark, lambda: build("local"))
     assert new_local, "local mode pinned no executor blocks to lose"
